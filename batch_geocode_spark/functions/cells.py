@@ -15,8 +15,9 @@ Key properties:
   so the DuckDB oracle reproduces identical ids.
 - parent/child relations are bit shifts of (x, y) → hierarchical
   rollups are cheap and partition-friendly (cell prefix = parent cell).
-- polyfill (cell cover of a bbox/polygon) is vectorized numpy, used
-  driver-side or inside pandas UDFs for the PIP prefilter join.
+- polyfill (cell cover of a bbox) is a Column expression too, so the
+  PIP prefilter join builds its cover on executors; ``np_polyfill_bbox``
+  is the numpy reference it is tested against.
 
 This plays the role H3/S2 plays in the north_star: stable tile ids for
 density maps and a spatial-locality partitioning key.
@@ -45,6 +46,31 @@ def cell_encode(lat: Column, lng: Column, res: int) -> Column:
     return (F.lit(res).cast("long") * F.lit(_RES_SHIFT) + y * F.lit(_Y_SHIFT) + x).alias(
         f"cell_r{res}"
     )
+
+
+def polyfill_bbox(w: Column, s: Column, e: Column, n: Column, res: int) -> Column:
+    """array<bigint> of every cell at ``res`` intersecting the bbox, the
+    Column form of :func:`np_polyfill_bbox`: the same clip/floor, rows
+    south to north, cells west to east. An inverted bbox covers nothing
+    (``sequence`` would count down where ``np.arange`` is empty)."""
+    grid = float(2**res)
+    hi = int(2**res - 1)
+
+    def idx(v: Column, offset: float, span: float) -> Column:
+        return F.least(F.lit(hi), F.greatest(F.lit(0), F.floor((v + offset) / span * grid)))
+
+    x0, x1 = idx(w, 180.0, 360.0), idx(e, 180.0, 360.0)
+    y0, y1 = idx(s, 90.0, 180.0), idx(n, 90.0, 180.0)
+    cells = F.flatten(
+        F.transform(
+            F.sequence(y0, y1),
+            lambda y: F.transform(
+                F.sequence(x0, x1),
+                lambda x: F.lit(res * _RES_SHIFT) + y * F.lit(_Y_SHIFT) + x,
+            ),
+        )
+    )
+    return F.when((x0 <= x1) & (y0 <= y1), cells).otherwise(F.array().cast("array<bigint>"))
 
 
 def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
@@ -236,7 +262,8 @@ def np_cell_ring_batch(cells, res: int) -> np.ndarray:
 
 
 def np_polyfill_bbox(w: float, s: float, e: float, n: float, res: int):
-    """All cells at ``res`` intersecting the bbox (vectorized meshgrid)."""
+    """All cells at ``res`` intersecting the bbox (vectorized meshgrid);
+    the reference for :func:`polyfill_bbox`."""
     w, s, e, n = float(w), float(s), float(e), float(n)
     grid = 2**res
     x0 = int(np.clip(np.floor((w + 180.0) / 360.0 * grid), 0, grid - 1))

@@ -3,112 +3,67 @@
 Reference analog: per-point country attribution (reference:
 geocode/query_funcs.py:411-427 OSM country filter) and admin-level
 result types (geocode/query_funcs.py:464). shapely/STRtree are
-unavailable, so the exact test is vectorized numpy even-odd ray
-casting; the STRtree role is played by a geocell-cover prefilter:
+unavailable, so the exact test is even-odd ray casting written as
+Spark higher-order functions; the STRtree role is played by a
+geocell-cover prefilter:
 
-    polygons --mapInPandas--> (cell, admin_id) cover at res R
-    points   --cell_encode--> cell at res R
-    points ⋈_broadcast cover on cell        -- candidate pairs only
-    candidates ⋈_broadcast polygons(rings)  -- attach geometry
-    mapInPandas numpy ray-cast              -- exact test per batch
+    polygons --explode(polyfill_bbox)--> (cell, admin attrs, rings) at res R
+    points   --cell_encode-------------> cell at res R
+    points ⋈_broadcast cover on cell   -- candidate pairs only
+    aggregate over ring edges          -- exact test per candidate
 
-At 10^12 points the big side never shuffles: both joins broadcast the
-(small) admin side; the exact test is Arrow-batched numpy.
+The whole join is lazy JVM Column expressions: the polygon side is
+never collected to the driver, no Python worker runs, and the big side
+never shuffles (the cover broadcasts).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.cells import cell_encode, np_polyfill_bbox
+from batch_geocode_spark.functions.cells import cell_encode, polyfill_bbox
 
 
-def polygon_cell_cover(
-    polygons: DataFrame, res: int, driver_side: bool = True
-) -> DataFrame:
-    """(admin_id, cell) for every res-cell intersecting each polygon bbox.
+def _edges(rings: Column) -> Column:
+    """The edges of all of a polygon's rings as one array of
+    (x1, y1, y2, dx = x2 - x1, dy = y2 - y1): even-odd parity summed over
+    every ring is the parity of the crossings of all their edges."""
 
-    The polygon side is broadcast downstream, so it is small by design;
-    ``driver_side=True`` computes the cover with driver numpy (4 doubles
-    per polygon in, no Python-worker stage). Set False to distribute via
-    mapInPandas for very large polygon sets.
-    """
-    bbox_only = polygons.select("admin_id", "bb_w", "bb_s", "bb_e", "bb_n")
-
-    if driver_side:
-        pdf = bbox_only.toPandas()
-        ids, cells_out = [], []
-        for row in pdf.itertuples():
-            cc = np_polyfill_bbox(row.bb_w, row.bb_s, row.bb_e, row.bb_n, res)
-            ids.append(np.full(len(cc), row.admin_id, dtype=np.int64))
-            cells_out.append(cc)
-        out = pd.DataFrame(
-            {
-                "admin_id": np.concatenate(ids) if ids else np.asarray([], dtype=np.int64),
-                "cell": np.concatenate(cells_out) if ids else np.asarray([], dtype=np.int64),
-            }
+    def ring_edges(ring: Column) -> Column:
+        idx = F.when(F.size(ring) > 1, F.sequence(F.lit(1), F.size(ring) - 1)).otherwise(
+            F.array().cast("array<int>")
         )
-        return polygons.sparkSession.createDataFrame(out, schema="admin_id long, cell long")
-
-    def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, cells_out = [], []
-            for row in pdf.itertuples():
-                cc = np_polyfill_bbox(row.bb_w, row.bb_s, row.bb_e, row.bb_n, res)
-                ids.append(np.full(len(cc), row.admin_id, dtype=np.int64))
-                cells_out.append(cc)
-            if ids:
-                yield pd.DataFrame(
-                    {"admin_id": np.concatenate(ids), "cell": np.concatenate(cells_out)}
-                )
-
-    return bbox_only.mapInPandas(cover, schema="admin_id long, cell long")
-
-
-_EDGE_POINT_BUDGET = 4_000_000  # max edges×points elements materialized at once
-
-
-def _points_in_edge_arrays(
-    px: np.ndarray, py: np.ndarray, rings: list[tuple[np.ndarray, np.ndarray]]
-) -> np.ndarray:
-    """Even-odd ray casting, vectorized over edges × points.
-
-    The edges×points intermediate is bounded by chunking the POINT axis
-    to ``_EDGE_POINT_BUDGET`` elements, so a real coastline (10⁴-10⁶
-    vertices) cannot blow a task's memory: peak stays ~budget×3 float64
-    regardless of ring size."""
-    inside = np.zeros(len(px), dtype=bool)
-    for xs, ys in rings:
-        n_edges = max(len(xs) - 1, 1)
-        chunk = max(_EDGE_POINT_BUDGET // n_edges, 1)
-        x1, y1 = xs[:-1, None], ys[:-1, None]
-        x2, y2 = xs[1:, None], ys[1:, None]
-        for s in range(0, len(px), chunk):
-            cpx = px[None, s : s + chunk]
-            cpy = py[None, s : s + chunk]
-            cond = (y1 > cpy) != (y2 > cpy)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (cpy - y1) / (y2 - y1) + x1
-            crossings = (cond & (cpx < xint)).sum(axis=0)
-            inside[s : s + chunk] ^= (crossings % 2).astype(bool)
-    return inside
-
-
-def _points_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
-    """Even-odd test on rings in struct form [[{'x':..,'y':..}, ...], ...]."""
-    arrays = [
-        (
-            np.asarray([p["x"] for p in ring], dtype=np.float64),
-            np.asarray([p["y"] for p in ring], dtype=np.float64),
+        return F.transform(
+            idx,
+            lambda i: F.struct(
+                ring[i - 1]["x"].alias("x1"),
+                ring[i - 1]["y"].alias("y1"),
+                ring[i]["y"].alias("y2"),
+                (ring[i]["x"] - ring[i - 1]["x"]).alias("dx"),
+                (ring[i]["y"] - ring[i - 1]["y"]).alias("dy"),
+            ),
         )
-        for ring in rings
-    ]
-    return _points_in_edge_arrays(px, py, arrays)
+
+    return F.flatten(F.transform(rings, ring_edges))
+
+
+def _inside(edges: Column, px: Column, py: Column) -> Column:
+    """Even-odd ray cast from (px, py) toward +x over ``edges``.
+
+    The crossing abscissa is ``(x2 - x1) * (py - y1) / (y2 - y1) + x1``,
+    the float operations of the classic vectorized test in the same
+    order (the two differences are point-independent, so precomputing
+    them changes no bit). The division runs only when the edge straddles
+    ``py``, so a horizontal edge never divides by zero (an error under
+    ANSI mode)."""
+
+    def flip(inside: Column, e: Column) -> Column:
+        xint = e["dx"] * (py - e["y1"]) / e["dy"] + e["x1"]
+        straddles = (e["y1"] > py) != (e["y2"] > py)
+        return inside != F.when(straddles, px < xint).otherwise(F.lit(False))
+
+    return F.aggregate(edges, F.lit(False), flip)
 
 
 def pip_join(
@@ -119,38 +74,18 @@ def pip_join(
     lat_col: str = "best_lat",
     lng_col: str = "best_long",
 ) -> DataFrame:
-    """Exact PIP join → (point id, admin_id, admin attrs).
+    """Exact PIP join → (pt_id string, pt_lat double, pt_lng double,
+    admin_id long, iso2 string, admin_level int, name string).
 
-    The polygon side is small by assumption (it must broadcast either
-    way), so its geometry ships to executors inside the UDF closure as
-    plain numpy arrays — the candidate rows carry only (point, admin_id)
-    and never duplicate ring structs through Arrow.
-    """
-    spark = points.sparkSession
-    # ONE driver collect feeds cover, attributes AND rings (r7: this was
-    # two separate polygon-side jobs — a bbox toPandas in
-    # polygon_cell_cover plus a rings collect); the polygon side is
-    # driver-sized by contract, so all three derivations are local.
-    poly_rows = polygons.select(
-        "admin_id", "iso2", "admin_level", "name", "bb_w", "bb_s", "bb_e", "bb_n", "rings"
-    ).collect()
-    ids, cells_out = [], []
-    for row in poly_rows:
-        cc = np_polyfill_bbox(row["bb_w"], row["bb_s"], row["bb_e"], row["bb_n"], res)
-        ids.append(np.full(len(cc), row["admin_id"], dtype=np.int64))
-        cells_out.append(cc)
-    cover = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "admin_id": np.concatenate(ids) if ids else np.asarray([], dtype=np.int64),
-                "cell": np.concatenate(cells_out) if ids else np.asarray([], dtype=np.int64),
-            }
-        ),
-        schema="admin_id long, cell long",
-    )
-    attrs = spark.createDataFrame(
-        [(row["admin_id"], row["iso2"], row["admin_level"], row["name"]) for row in poly_rows],
-        schema="admin_id long, iso2 string, admin_level int, name string",
+    ``polygons`` carries (admin_id, iso2, admin_level, name, bb_w, bb_s,
+    bb_e, bb_n, rings); it is small by assumption, since its cover
+    broadcasts. A point is inside when the crossings summed over all of
+    a polygon's rings are odd, so inner rings are holes."""
+    cover = polygons.select(
+        F.explode(
+            polyfill_bbox(F.col("bb_w"), F.col("bb_s"), F.col("bb_e"), F.col("bb_n"), res)
+        ).alias("cell"),
+        "admin_id", "iso2", "admin_level", "name", _edges(F.col("rings")).alias("edges"),
     )
     pts = points.select(
         F.col(id_col).alias("pt_id"),
@@ -158,47 +93,16 @@ def pip_join(
         F.col(lng_col).alias("pt_lng"),
         cell_encode(F.col(lat_col), F.col(lng_col), res).alias("cell"),
     )
-    cand = pts.join(F.broadcast(cover), "cell", "inner").join(
-        F.broadcast(attrs), "admin_id", "inner"
+    return (
+        pts.join(F.broadcast(cover), "cell", "inner")
+        .where(_inside(F.col("edges"), F.col("pt_lng"), F.col("pt_lat")))
+        .select(
+            F.col("pt_id").cast("string"),
+            F.col("pt_lat").cast("double"),
+            F.col("pt_lng").cast("double"),
+            F.col("admin_id").cast("long"),
+            F.col("iso2").cast("string"),
+            F.col("admin_level").cast("int"),
+            F.col("name").cast("string"),
+        )
     )
-
-    # geometry → numpy edge arrays once, on the driver; shipped as an
-    # executor broadcast variable (sent once per executor), not UDF
-    # closure capture (once per task)
-    rings_by_admin: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
-    for row in poly_rows:
-        rings_by_admin[int(row["admin_id"])] = [
-            (
-                np.asarray([p["x"] for p in ring], dtype=np.float64),
-                np.asarray([p["y"] for p in ring], dtype=np.float64),
-            )
-            for ring in row["rings"]
-        ]
-    bc_rings = spark.sparkContext.broadcast(rings_by_admin)
-
-    out_schema = (
-        "pt_id string, pt_lat double, pt_lng double, admin_id long, "
-        "iso2 string, admin_level int, name string"
-    )
-
-    def exact(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rings = bc_rings.value
-        for pdf in it:
-            if pdf.empty:
-                continue
-            pdf = pdf.reset_index(drop=True)
-            keep = np.zeros(len(pdf), dtype=bool)
-            for admin_id, grp in pdf.groupby("admin_id", sort=False):
-                mask = _points_in_edge_arrays(
-                    grp["pt_lng"].to_numpy(np.float64),
-                    grp["pt_lat"].to_numpy(np.float64),
-                    rings[int(admin_id)],
-                )
-                keep[grp.index.to_numpy()] = mask
-            res_pdf = pdf.loc[
-                keep, ["pt_id", "pt_lat", "pt_lng", "admin_id", "iso2", "admin_level", "name"]
-            ]
-            if len(res_pdf):
-                yield res_pdf
-
-    return cand.mapInPandas(exact, schema=out_schema)

@@ -99,7 +99,7 @@ def zonal_cells(
     Cell centers come from pure id arithmetic (no decode table);
     membership reuses the cell-cover-prefilter PIP join, so the
     polygon side broadcasts and the density never shuffles before the
-    caller's keyed aggregation. pip_join's Arrow schema types pt_id as
+    caller's keyed aggregation. pip_join's output schema types pt_id as
     string (its natural id is image_id); the cell id rides through as
     a string.
 

@@ -399,8 +399,7 @@ def semantic_decontamination(
             e_mat, e_n = bc.value
             m, dim = e_mat.shape
             # bound the (rows × eval) accumulator regardless of Arrow
-            # batch size and eval-set growth (same memory-budget pattern
-            # as pip._points_in_edge_arrays): peak ≈ budget × 3 float64
+            # batch size and eval-set growth: peak ≈ budget × 3 float64
             chunk = max(_SEM_PAIR_BUDGET // m, 1)
             for pdf in it:
                 for s in range(0, len(pdf), chunk):

@@ -109,7 +109,7 @@ def stream_pip_matches(
 ) -> DataFrame:
     """CONTINUOUS stream-static point-in-polygon: streaming images →
     candidate geocodes (stream-static broadcast join, no aggregation) →
-    cell-cover broadcast join → exact ray-cast mapInPandas. Every stage
+    cell-cover broadcast join → exact Column ray cast. Every stage
     is append-mode stream-native (stateless maps + stream-static inner
     joins), so this needs no watermark, no foreachBatch, and emits
     matches per candidate row as they arrive. Returns the streaming

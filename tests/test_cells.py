@@ -51,6 +51,44 @@ def test_polyfill_bbox_covers_points():
     assert set(pts.tolist()) <= cover
 
 
+def test_polyfill_bbox_column_matches_numpy(spark):
+    """The Column cover equals np_polyfill_bbox cell for cell, in order:
+    random bboxes at res 2-9, bboxes clamped at ±180/±90, and inverted
+    bboxes, whose cover is empty (Spark's ``sequence`` counts down)."""
+    rng = np.random.default_rng(7)
+    boxes = []
+    for _ in range(40):
+        res = int(rng.integers(2, 10))
+        lng = np.sort(rng.uniform(-180.0, 180.0, 2))
+        lat = np.sort(rng.uniform(-90.0, 90.0, 2))
+        # shrink most boxes so fine resolutions stay a few thousand cells
+        scale = 1.0 if res <= 4 else 2.0 ** (4 - res)
+        w, s = float(lng[0]), float(lat[0])
+        e, n = float(w + (lng[1] - lng[0]) * scale), float(s + (lat[1] - lat[0]) * scale)
+        boxes.append((w, s, e, n, res))
+    boxes += [
+        (-180.0, -90.0, 180.0, 90.0, 5),  # whole world: max edges clamp to 2^r - 1
+        (-200.0, -95.0, -170.0, -80.0, 6),  # beyond the south-west corner
+        (170.0, 80.0, 190.0, 100.0, 6),  # beyond the north-east corner
+        (10.0, 0.0, -10.0, 5.0, 6),  # inverted in lng
+        (0.0, 5.0, 10.0, -5.0, 6),  # inverted in lat
+        (3.0, 3.0, 3.0, 3.0, 9),  # a point
+    ]
+    df = spark.createDataFrame(
+        [(i, *b) for i, b in enumerate(boxes)],
+        "i int, w double, s double, e double, n double, res int",
+    )
+    got = {}
+    for res in sorted({b[4] for b in boxes}):
+        rows = df.where(F.col("res") == res).select(
+            "i", cells.polyfill_bbox(F.col("w"), F.col("s"), F.col("e"), F.col("n"), res)
+        ).collect()
+        got.update({r[0]: r[1] for r in rows})
+    for i, (w, s, e, n, res) in enumerate(boxes):
+        assert got[i] == cells.np_polyfill_bbox(w, s, e, n, res).tolist(), boxes[i]
+    assert got[len(boxes) - 3] == [] and got[len(boxes) - 2] == []
+
+
 def test_column_and_sql_match_numpy(spark):
     rng = np.random.default_rng(1)
     lats = rng.uniform(-90, 90, 50)

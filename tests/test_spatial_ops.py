@@ -52,8 +52,15 @@ def test_density_rollup_conserves_mass(geo):
 def test_pip_join_matches_bbox_oracle(spark, geo):
     _, _, _, best = geo
     polys = datagen.admin_polygons_to_spark(spark)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup(None))
+    joined = pip.pip_join(best, polys, res=6)
+    # lazy and JVM-only: no job before the caller's action, no Python stage
+    assert len(tracker.getJobIdsForGroup(None)) == jobs_before
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "ArrowEval" not in plan
     got = (
-        pip.pip_join(best, polys, res=6)
+        joined
         .toPandas()
         .sort_values(["pt_id", "admin_id"])
         .reset_index(drop=True)
@@ -76,7 +83,35 @@ def test_pip_join_matches_bbox_oracle(spark, geo):
     assert (lvl == 1).all()
 
 
-def test_pip_ray_casting_concave():
+POLY_SCHEMA = (
+    "admin_id long, iso2 string, admin_level int, name string, "
+    "bb_w double, bb_s double, bb_e double, bb_n double, "
+    "rings array<array<struct<x:double,y:double>>>"
+)
+PIP_SCHEMA = (
+    "pt_id string, pt_lat double, pt_lng double, admin_id long, "
+    "iso2 string, admin_level int, name string"
+)
+
+
+def _even_odd_reference(px, py, rings):
+    """numpy even-odd ray casting, vectorized over edges × points: the
+    reference for pip_join's exact test (same float operations, same
+    order)."""
+    inside = np.zeros(len(px), dtype=bool)
+    for ring in rings:
+        xs = np.asarray([p["x"] for p in ring], dtype=np.float64)
+        ys = np.asarray([p["y"] for p in ring], dtype=np.float64)
+        x1, y1 = xs[:-1, None], ys[:-1, None]
+        x2, y2 = xs[1:, None], ys[1:, None]
+        cond = (y1 > py[None, :]) != (y2 > py[None, :])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = (x2 - x1) * (py[None, :] - y1) / (y2 - y1) + x1
+        inside ^= ((cond & (px[None, :] < xint)).sum(axis=0) % 2).astype(bool)
+    return inside
+
+
+def test_pip_ray_casting_concave(spark):
     # concave "L" polygon with a hole — beyond what rectangles exercise
     outer = [(0, 0), (4, 0), (4, 4), (2, 4), (2, 2), (0, 2), (0, 0)]
     hole = [(0.5, 0.5), (1.5, 0.5), (1.5, 1.5), (0.5, 1.5), (0.5, 0.5)]
@@ -84,12 +119,47 @@ def test_pip_ray_casting_concave():
         [{"x": float(x), "y": float(y)} for x, y in outer],
         [{"x": float(x), "y": float(y)} for x, y in hole],
     ]
-    px = np.array([1.0, 3.0, 3.0, 1.0, 5.0, 2.5])
-    py = np.array([1.0, 1.0, 3.0, 3.0, 1.0, 2.5])
-    got = pip._points_in_rings(px, py, rings)
+    polys = spark.createDataFrame(
+        [(1, "ll", 0, "L", 0.0, 0.0, 4.0, 4.0, rings)], POLY_SCHEMA
+    )
     # (1,1) in hole; (3,1) inside; (3,3) inside upper arm; (1,3) in the
-    # notch (outside); (5,1) outside; (2.5,2.5) inside
-    assert got.tolist() == [False, True, True, False, False, True]
+    # notch (outside); (5,1) outside; (2.5,2.5) inside — then points
+    # level with the horizontal edges y=0, 0.5, 1.5, 2, 4 and on the
+    # vertices (2,2), (4,0), (4,4), (0.5,0.5), where ANSI mode would
+    # see a zero divisor if the division ran outside its guard
+    pts = [(1.0, 1.0), (3.0, 1.0), (3.0, 3.0), (1.0, 3.0), (5.0, 1.0), (2.5, 2.5)]
+    pts += [(x, y) for y in (0.0, 0.5, 1.5, 2.0, 4.0) for x in (-1.0, 0.25, 1.0, 1.75, 3.0)]
+    pts += [(2.0, 2.0), (4.0, 0.0), (4.0, 4.0), (0.5, 0.5), (2.0, 3.0), (3.0, 2.0)]
+    points = spark.createDataFrame(
+        [(f"p{i}", y, x) for i, (x, y) in enumerate(pts)],
+        "image_id string, best_lat double, best_long double",
+    )
+    got = pip.pip_join(points, polys, res=0).toPandas()  # every point a candidate
+    px = np.array([x for x, _ in pts])
+    py = np.array([y for _, y in pts])
+    want = _even_odd_reference(px, py, rings)
+    assert sorted(got["pt_id"]) == sorted(f"p{i}" for i in np.flatnonzero(want))
+    assert want[:6].tolist() == [False, True, True, False, False, True]
+    assert (got["admin_id"] == 1).all() and (got["name"] == "L").all()
+
+
+def _fields(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_pip_join_empty_polygons(spark, geo):
+    _, _, _, best = geo
+    polys = spark.createDataFrame([], POLY_SCHEMA)
+    got = pip.pip_join(best, polys, res=6)
+    assert _fields(got) == _fields(spark.createDataFrame([], PIP_SCHEMA))
+    assert got.count() == 0
+
+
+def test_pip_join_empty_points(spark):
+    points = spark.createDataFrame([], "image_id string, best_lat double, best_long double")
+    got = pip.pip_join(points, datagen.admin_polygons_to_spark(spark), res=6)
+    assert _fields(got) == _fields(spark.createDataFrame([], PIP_SCHEMA))
+    assert got.count() == 0
 
 
 def test_admin_rollup(spark, geo):
@@ -284,7 +354,8 @@ def test_zonal_stats(geo, spark):
 
 
 def test_pip_high_vertex_polygon_chunked(spark):
-    """A 10^4-vertex ring exercises the chunked ray-cast fallback; the
+    """A 10^4-vertex ring runs the per-edge ray-cast loop 10^4 times per
+    candidate point (the test's name predates the Column ray cast); the
     regular N-gon is near-circular, so radius comparison with an
     apothem margin is an analytic oracle."""
     import math
