@@ -7,13 +7,13 @@ reference (GISforHealth/batch_geocode), re-expressed Spark-first:
   (reference: geocode/query_funcs.py:342-349, one blocking GET per row)
 - buffer vetting + composite-best as DataFrame aggregates
   (reference: geocode/query_funcs.py:193-219)
-- hierarchical geocell index (pure arithmetic, JVM-side Column exprs)
-- point-in-polygon joins via cell-cover prefilter + vectorized numpy
+- hierarchical geocell index (pure arithmetic, JVM-side SQL expressions)
+- point-in-polygon joins via cell-cover prefilter + even-odd ray cast
 - kNN candidate matching across gazetteer sources
 - raster-tile density aggregation
 - snapshot/manifest checkpoint-resume layer
 
-All hot paths are Column expressions or Arrow-batched pandas UDFs —
+All hot paths are built-in JVM expressions or Arrow-batched pandas UDFs —
 no per-row Python anywhere.
 """
 

@@ -207,15 +207,9 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _admin_polys(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
-    rect = spark.sql(ADMIN_SQL)
-    ring = F.array(
-        F.struct(F.col("bb_w").alias("x"), F.col("bb_s").alias("y")),
-        F.struct(F.col("bb_e").alias("x"), F.col("bb_s").alias("y")),
-        F.struct(F.col("bb_e").alias("x"), F.col("bb_n").alias("y")),
-        F.struct(F.col("bb_w").alias("x"), F.col("bb_n").alias("y")),
-        F.struct(F.col("bb_w").alias("x"), F.col("bb_s").alias("y")),
-    )
-    return rect.withColumn("rings", F.array(ring))
+    corners = [("bb_w", "bb_s"), ("bb_e", "bb_s"), ("bb_e", "bb_n"), ("bb_w", "bb_n"), ("bb_w", "bb_s")]
+    ring = ", ".join(f"named_struct('x', {x}, 'y', {y})" for x, y in corners)
+    return spark.sql(ADMIN_SQL).selectExpr("*", f"array(array({ring})) AS rings")
 
 
 def _geocoded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -403,11 +397,11 @@ def g02_composite_best(spark, sf_dir):
 
 
 def g03_cell_assign(spark, sf_dir):
-    """F20 cell encoding of best points (pure Column arithmetic)."""
+    """F20 cell encoding of best points (pure integer arithmetic, no UDF)."""
     _, best = _geocoded(spark, sf_dir)
     return best.select(
         "image_id",
-        cell_encode(F.col("best_lat"), F.col("best_long"), TILE_RES).alias("cell"),
+        cell_encode("best_lat", "best_long", TILE_RES).alias("cell"),
     )
 
 
@@ -1259,12 +1253,12 @@ def g12_spatial_knn(spark, sf_dir):
     _, best = _geocoded(spark, sf_dir)
     gaz = _gaz(spark, sf_dir)
     k = KNN.knn_spatial(best, gaz, k=5, res=7)
-    return k.select(
+    return k.selectExpr(
         "query_id",
         "nbr_id",
-        F.round(F.col("nbr_lat").cast("double"), 6).alias("nbr_lat"),
-        F.round(F.col("nbr_lng").cast("double"), 6).alias("nbr_lng"),
-        F.round("dist_km", 6).alias("dist_km"),
+        "round(CAST(nbr_lat AS DOUBLE), 6) AS nbr_lat",
+        "round(CAST(nbr_lng AS DOUBLE), 6) AS nbr_lng",
+        "round(dist_km, 6) AS dist_km",
         "knn_rank",
     )
 
@@ -1661,9 +1655,7 @@ def g20_hull_metrics(spark, sf_dir):
             ).alias("hull_area_deg2"),
             F.round(
                 F.sum(
-                    haversine_km(
-                        F.col("lat"), F.col("lng"), F.col("lat2"), F.col("lng2")
-                    )
+                    haversine_km("lat", "lng", "lat2", "lng2")
                 ),
                 6,
             ).alias("perimeter_km"),
@@ -1744,7 +1736,7 @@ def g21_quadkey_density(spark, sf_dir):
     """Per-cell density addressed by QUADKEY (Bing-maps tile-string
     interchange, ``cells.quadkey``): one base-4 digit per level, parent
     quadkey = child's string prefix, so map clients prune
-    hierarchically with startswith. Pure integer/concat Column exprs;
+    hierarchically with startswith. Pure integer/concat expressions;
     the oracle regenerates the identical strings from the same cell
     arithmetic."""
     from batch_geocode_spark.operators import tiles as T

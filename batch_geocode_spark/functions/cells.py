@@ -10,14 +10,16 @@ grid, Bing-quadkey-style hierarchy): at resolution ``r`` the world
     cell_id = r * 2^58 + y * 2^29 + x    (fits int64 for r ≤ 29)
 
 Key properties:
-- encode/decode are pure integer arithmetic → implemented as Spark
-  Column expressions (whole-stage codegen, no UDF) AND as portable SQL
-  so the DuckDB oracle reproduces identical ids.
+- encode/decode are pure integer arithmetic, defined once as SQL text
+  (``*_sql``): the Column helpers parse it with one ``F.expr`` (built-in
+  expressions, whole-stage codegen, no UDF), and the DuckDB oracles run
+  ``cell_encode_sql``/``quadkey_sql`` verbatim, so both engines produce
+  identical ids.
 - parent/child relations are bit shifts of (x, y) → hierarchical
   rollups are cheap and partition-friendly (cell prefix = parent cell).
-- polyfill (cell cover of a bbox) is a Column expression too, so the
-  PIP prefilter join builds its cover on executors; ``np_polyfill_bbox``
-  is the numpy reference it is tested against.
+- the 9-cell ring and the bbox polyfill are Spark SQL array expressions,
+  so the kNN/DBSCAN candidate joins and the PIP cover run on executors;
+  ``np_cell_ring_batch`` and ``np_polyfill_bbox`` are their references.
 
 This plays the role H3/S2 plays in the north_star: stable tile ids for
 density maps and a spatial-locality partitioning key.
@@ -27,116 +29,153 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column
-from pyspark.sql import functions as F
+
+from batch_geocode_spark.functions.sqlexpr import expr, sql_of
 
 MAX_RES = 29
 _RES_SHIFT = 2**58
 _Y_SHIFT = 2**29
 
 
-# ---------------------------------------------------------------- Column API
-def cell_encode(lat: Column, lng: Column, res: int) -> Column:
-    """lat/lng → int64 cell id at resolution ``res`` (pure Column expr)."""
-    if not 0 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [0, {MAX_RES}]")
-    n = float(2**res)
-    hi = int(2**res - 1)
-    x = F.least(F.lit(hi), F.greatest(F.lit(0), F.floor((lng + 180.0) / 360.0 * n))).cast("long")
-    y = F.least(F.lit(hi), F.greatest(F.lit(0), F.floor((lat + 90.0) / 180.0 * n))).cast("long")
-    return (F.lit(res).cast("long") * F.lit(_RES_SHIFT) + y * F.lit(_Y_SHIFT) + x).alias(
-        f"cell_r{res}"
+# ------------------------------------------------------------ SQL builders
+# Each builder takes SQL text for its inputs and returns SQL text; the
+# Column helpers below parse that text once (``sqlexpr.expr``). Literals
+# that meet a coordinate are written as DOUBLE so a DECIMAL input is
+# computed in double, never as an exact decimal (``90.0`` alone is a
+# DECIMAL in both Spark SQL and DuckDB). The encode, parent and quadkey
+# builders are portable (the DuckDB oracles run encode and quadkey); the
+# ring and polyfill builders use Spark's array functions.
+def _double(v: float) -> str:
+    return f"CAST({float(v)!r} AS DOUBLE)"
+
+
+def _check_res(res: int, lo: int = 0) -> None:
+    if not lo <= res <= MAX_RES:
+        raise ValueError(f"res must be in [{lo}, {MAX_RES}]")
+
+
+def _cell_x(cell: str) -> str:
+    return f"(({cell}) % {_Y_SHIFT})"
+
+
+def _cell_y(cell: str) -> str:
+    # '/' divides in double (the integer parts stay exact below res 25)
+    return f"CAST(floor((({cell}) % {_RES_SHIFT}) / {_Y_SHIFT}) AS BIGINT)"
+
+
+def _grid_index(v: str, offset: float, span: float, res: int) -> str:
+    """floor((v + offset) / span * 2^res) clipped to [0, 2^res - 1]."""
+    return (
+        f"least({2**res - 1}, greatest(0, CAST(floor((({v}) + {_double(offset)}) "
+        f"/ {_double(span)} * {_double(2**res)}) AS BIGINT)))"
     )
 
 
-def polyfill_bbox(w: Column, s: Column, e: Column, n: Column, res: int) -> Column:
-    """array<bigint> of every cell at ``res`` intersecting the bbox, the
-    Column form of :func:`np_polyfill_bbox`: the same clip/floor, rows
-    south to north, cells west to east. An inverted bbox covers nothing
-    (``sequence`` would count down where ``np.arange`` is empty)."""
-    grid = float(2**res)
-    hi = int(2**res - 1)
-
-    def idx(v: Column, offset: float, span: float) -> Column:
-        return F.least(F.lit(hi), F.greatest(F.lit(0), F.floor((v + offset) / span * grid)))
-
-    x0, x1 = idx(w, 180.0, 360.0), idx(e, 180.0, 360.0)
-    y0, y1 = idx(s, 90.0, 180.0), idx(n, 90.0, 180.0)
-    cells = F.flatten(
-        F.transform(
-            F.sequence(y0, y1),
-            lambda y: F.transform(
-                F.sequence(x0, x1),
-                lambda x: F.lit(res * _RES_SHIFT) + y * F.lit(_Y_SHIFT) + x,
-            ),
-        )
-    )
-    return F.when((x0 <= x1) & (y0 <= y1), cells).otherwise(F.array().cast("array<bigint>"))
+def cell_encode_sql(lat: str, lng: str, res: int) -> str:
+    """lat/lng → int64 cell id at resolution ``res``."""
+    _check_res(res)
+    x = _grid_index(lng, 180.0, 360.0, res)
+    y = _grid_index(lat, 90.0, 180.0, res)
+    return f"(CAST({res} AS BIGINT) * {_RES_SHIFT} + {y} * {_Y_SHIFT} + {x})"
 
 
-def cell_parent(cell: Column, res: int, parent_res: int) -> Column:
-    """Coarsen a cell id from ``res`` to ``parent_res`` (Column expr)."""
+def cell_parent_sql(cell: str, res: int, parent_res: int) -> str:
+    """Coarsen a cell id from ``res`` to ``parent_res``."""
     if parent_res > res:
         raise ValueError("parent_res must be <= res")
     shift = 2 ** (res - parent_res)
-    x = cell % F.lit(_Y_SHIFT)
-    y = F.floor((cell % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("long")
-    xp = F.floor(x / F.lit(shift)).cast("long")
-    yp = F.floor(y / F.lit(shift)).cast("long")
-    return (F.lit(parent_res).cast("long") * F.lit(_RES_SHIFT) + yp * F.lit(_Y_SHIFT) + xp).alias(
-        f"cell_r{parent_res}"
+    xp = f"CAST(floor({_cell_x(cell)} / {shift}) AS BIGINT)"
+    yp = f"CAST(floor({_cell_y(cell)} / {shift}) AS BIGINT)"
+    return f"(CAST({parent_res} AS BIGINT) * {_RES_SHIFT} + {yp} * {_Y_SHIFT} + {xp})"
+
+
+def quadkey_sql(cell: str, res: int) -> str:
+    """Cell id → quadkey string (Bing-maps-style tile addressing): one
+    base-4 digit per level, MSB first, digit = 2·bit(y) + bit(x). A
+    parent cell's quadkey is the child's PREFIX, so hierarchical pruning
+    is a `startswith`, the interchange format map clients expect."""
+    _check_res(res, 1)
+    x, y = _cell_x(cell), _cell_y(cell)
+    digits = " || ".join(
+        f"CAST(CAST((floor({y} / {2**i}) % 2) * 2 + (floor({x} / {2**i}) % 2) AS INT) AS STRING)"
+        for i in range(res - 1, -1, -1)
+    )
+    return f"({digits})"
+
+
+def cell_ring_sql(cell: str, res: int) -> str:
+    """9-cell neighborhood (8-ring + center) of a res-level cell id:
+    array<bigint> of length 9 in the (dy-major) order of
+    :func:`np_cell_ring_batch`, lng wraps, lat clamps — out-of-range
+    entries are -1 (filter them after explode). ``res >= 2`` required:
+    below that the lng wrap makes ring columns collide and the array is
+    no longer a set (np_cell_ring_batch handles that case; every caller
+    here already enforces res >= 2)."""
+    _check_res(res, 2)
+    n = 2**res
+    x, y = _cell_x(cell), _cell_y(cell)
+    entries = []
+    for dy in (-1, 0, 1):
+        yy = f"({y} + {dy})"
+        for dx in (-1, 0, 1):
+            entries.append(
+                f"CASE WHEN {yy} >= 0 AND {yy} < {n} THEN CAST({res} AS BIGINT) * "
+                f"{_RES_SHIFT} + {yy} * {_Y_SHIFT} + pmod({x} + {dx}, {n}) "
+                "ELSE CAST(-1 AS BIGINT) END"
+            )
+    return f"array({', '.join(entries)})"
+
+
+def polyfill_sql(w: str, s: str, e: str, n: str, res: int) -> str:
+    """array<bigint> of every cell at ``res`` intersecting the bbox, as
+    :func:`np_polyfill_bbox` computes it: the same clip/floor, rows
+    south to north, cells west to east. An inverted bbox covers nothing
+    (``sequence`` would count down where ``np.arange`` is empty). The
+    lambda variables are named so no input column can shadow them."""
+    _check_res(res)
+    x0, x1 = _grid_index(w, 180.0, 360.0, res), _grid_index(e, 180.0, 360.0, res)
+    y0, y1 = _grid_index(s, 90.0, 180.0, res), _grid_index(n, 90.0, 180.0, res)
+    cells = (
+        f"flatten(transform(sequence({y0}, {y1}), _fill_y -> transform(sequence({x0}, {x1}), "
+        f"_fill_x -> {res * _RES_SHIFT} + _fill_y * {_Y_SHIFT} + _fill_x)))"
+    )
+    return (
+        f"CASE WHEN {x0} <= {x1} AND {y0} <= {y1} THEN {cells} "
+        "ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
 
 
-def quadkey(cell: Column, res: int) -> Column:
-    """Cell id → quadkey string (Bing-maps-style tile addressing): one
-    base-4 digit per level, MSB first, digit = 2·bit(y) + bit(x). The
-    defining property — a parent cell's quadkey is the child's PREFIX —
-    makes hierarchical pruning a `startswith`, the interchange format
-    map clients expect. Pure integer/concat Column exprs (no UDF), and
-    :func:`quadkey_sql` emits the identical string cross-engine."""
-    if not 1 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [1, {MAX_RES}]")
-    x = (cell % F.lit(_Y_SHIFT)).cast("long")
-    y = F.floor((cell % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("long")
-    parts = [
-        (
-            (F.floor(y / F.lit(2**i)) % 2) * 2 + (F.floor(x / F.lit(2**i)) % 2)
-        )
-        .cast("int")
-        .cast("string")
-        for i in range(res - 1, -1, -1)
-    ]
-    return F.concat(*parts).alias(f"quadkey_r{res}")
+# ---------------------------------------------------------------- Column API
+# One F.expr per call over the builders above; arguments are column
+# names, F.col references or other helpers' outputs (``sqlexpr``).
+def cell_encode(lat: Column | str, lng: Column | str, res: int) -> Column:
+    """lat/lng → int64 cell id at resolution ``res`` (:func:`cell_encode_sql`)."""
+    return expr(cell_encode_sql(sql_of(lat), sql_of(lng), res), f"cell_r{res}")
 
 
-def cell_ring_cells(cell: Column, res: int) -> Column:
-    """9-cell neighborhood (8-ring + center) of a res-level cell id as a
-    pure Column expression: array<long> of length 9 in the same
-    (dy-major) order as :func:`np_cell_ring_batch`, lng wraps, lat
-    clamps — out-of-range entries are -1 (filter them after explode).
-    Replaces the pandas_udf ring encoder on the kNN/DBSCAN candidate
-    paths (guide §4.1: built-ins over UDFs — no Python boundary, no
-    ArrowEvalPython stage). ``res >= 2`` required: below that the lng
-    wrap makes ring columns collide and the array is no longer a set
-    (np_cell_ring_batch handles that case; every caller here already
-    enforces res >= 2)."""
-    if not 2 <= res <= MAX_RES:
-        raise ValueError(f"res must be in [2, {MAX_RES}]")
-    n = 2**res
-    x = cell % F.lit(_Y_SHIFT)
-    y = F.floor((cell % F.lit(_RES_SHIFT)) / F.lit(_Y_SHIFT)).cast("long")
-    entries = []
-    for dy in (-1, 0, 1):
-        yy = y + F.lit(dy)
-        for dx in (-1, 0, 1):
-            xx = F.pmod(x + F.lit(dx), F.lit(n))
-            entries.append(
-                F.when(
-                    (yy >= 0) & (yy < n),
-                    F.lit(res).cast("long") * F.lit(_RES_SHIFT) + yy * F.lit(_Y_SHIFT) + xx,
-                ).otherwise(F.lit(-1).cast("long"))
-            )
-    return F.array(*entries).alias(f"ring_r{res}")
+def cell_parent(cell: Column | str, res: int, parent_res: int) -> Column:
+    """Coarsen a cell id from ``res`` to ``parent_res`` (:func:`cell_parent_sql`)."""
+    return expr(cell_parent_sql(sql_of(cell), res, parent_res), f"cell_r{parent_res}")
+
+
+def quadkey(cell: Column | str, res: int) -> Column:
+    """Cell id → quadkey string (:func:`quadkey_sql`)."""
+    return expr(quadkey_sql(sql_of(cell), res), f"quadkey_r{res}")
+
+
+def cell_ring_cells(cell: Column | str, res: int) -> Column:
+    """9-cell neighborhood of a cell id (:func:`cell_ring_sql`); a built-in
+    expression, so the kNN/DBSCAN candidate paths cross no Python
+    boundary."""
+    _check_res(res, 2)  # before rendering: a bad res is a ValueError whatever the cell
+    return expr(cell_ring_sql(sql_of(cell), res), f"ring_r{res}")
+
+
+def polyfill_bbox(
+    w: Column | str, s: Column | str, e: Column | str, n: Column | str, res: int
+) -> Column:
+    """Cell cover of a bbox as array<bigint> (:func:`polyfill_sql`)."""
+    return expr(polyfill_sql(sql_of(w), sql_of(s), sql_of(e), sql_of(n), res))
 
 
 def np_quadkey_decode(qk: str) -> tuple[int, int, int]:
@@ -148,27 +187,6 @@ def np_quadkey_decode(qk: str) -> tuple[int, int, int]:
         x = x * 2 + (d & 1)
         y = y * 2 + (d >> 1)
     return res, y, x
-
-
-# ------------------------------------------------------------ SQL generators
-def quadkey_sql(cell: str, res: int) -> str:
-    """Portable SQL producing strings identical to :func:`quadkey`."""
-    x = f"(({cell}) % {_Y_SHIFT})"
-    y = f"((({cell}) % {_RES_SHIFT}) // {_Y_SHIFT})"
-    digits = " || ".join(
-        f"CAST((({y} // {2**i}) % 2) * 2 + (({x} // {2**i}) % 2) AS VARCHAR)"
-        for i in range(res - 1, -1, -1)
-    )
-    return f"({digits})"
-
-
-def cell_encode_sql(lat: str, lng: str, res: int) -> str:
-    """Portable SQL producing ids identical to :func:`cell_encode`."""
-    n = float(2**res)
-    hi = 2**res - 1
-    x = f"least({hi}, greatest(0, CAST(floor((({lng}) + 180.0) / 360.0 * {n}) AS BIGINT)))"
-    y = f"least({hi}, greatest(0, CAST(floor((({lat}) + 90.0) / 180.0 * {n}) AS BIGINT)))"
-    return f"(CAST({res} AS BIGINT) * {_RES_SHIFT} + {y} * {_Y_SHIFT} + {x})"
 
 
 # ----------------------------------------------------------------- numpy API

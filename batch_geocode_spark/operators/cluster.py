@@ -47,8 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.cells import cell_encode, cell_ring_cells
-from batch_geocode_spark.functions.geo import haversine_km
+from batch_geocode_spark.functions.cells import cell_encode_sql, cell_ring_sql
+from batch_geocode_spark.functions.geo import haversine_sql
 
 
 def weighted_sites(
@@ -73,34 +73,22 @@ def eps_site_pairs(sites: DataFrame, eps_km: float, res: int) -> DataFrame:
     if res < 2:
         raise ValueError("res must be >= 2 (ring cells collide below that)")
 
-    # encode + ring are pure Column exprs (r7: replaced two pandas_udfs
-    # — same integer math, no JVM->Python round trip, no ArrowEvalPython
-    # stage in the plan)
-    b = sites.select(
-        F.col("site_id").alias("b_id"),
-        F.col("lat").alias("b_lat"),
-        F.col("lng").alias("b_lng"),
-        F.col("w").alias("b_w"),
-        cell_encode(F.col("lat"), F.col("lng"), res).alias("cell"),
+    # encode + ring are built-in expressions (no Python UDF, no
+    # ArrowEvalPython stage); invalid ring entries are -1
+    b = sites.selectExpr(
+        "site_id AS b_id", "lat AS b_lat", "lng AS b_lng", "w AS b_w",
+        f"{cell_encode_sql('lat', 'lng', res)} AS cell",
     )
-    a = sites.select(
-        F.col("site_id").alias("a_id"),
-        F.col("lat").alias("a_lat"),
-        F.col("lng").alias("a_lng"),
-        F.col("w").alias("a_w"),
-        F.explode(
-            cell_ring_cells(cell_encode(F.col("lat"), F.col("lng"), res), res)
-        ).alias("cell"),
-    ).filter(F.col("cell") >= 0)
+    ring = cell_ring_sql(cell_encode_sql("lat", "lng", res), res)
+    a = sites.selectExpr(
+        "site_id AS a_id", "lat AS a_lat", "lng AS a_lng", "w AS a_w",
+        f"explode({ring}) AS cell",
+    ).where("cell >= 0")
+    dist = haversine_sql("a_lat", "a_lng", "b_lat", "b_lng")
     return (
         a.join(b, "cell", "inner")
-        .withColumn(
-            "dist_km",
-            haversine_km(
-                F.col("a_lat"), F.col("a_lng"), F.col("b_lat"), F.col("b_lng")
-            ),
-        )
-        .filter(F.col("dist_km") <= eps_km)
+        .selectExpr("*", f"{dist} AS dist_km")
+        .where(f"dist_km <= {float(eps_km)!r}D")
     )
 
 

@@ -23,94 +23,82 @@ Scale notes (10^12-row design):
   shuffles for the join itself.
 - `select` drops the `bytes` payload before the join so column pruning
   actually removes the image payload from the geocode path.
-- duplicate-work elimination: identical captions are geocoded once via
-  `distinct(loc_key)` and re-joined (the reference re-queries per row,
-  geocode/batch_geocode.py:173-182) — controlled by `dedup_keys`.
+- every row is probed once: the probe is a broadcast hash lookup, so
+  geocoding distinct captions and re-joining (the reference's per-row
+  HTTP calls would pay for that, geocode/batch_geocode.py:173-182)
+  measured ~2.7× slower at sf0.1 — it scans and regexes the input twice
+  and adds a full-input distinct shuffle.
+- expressions are SQL text (``functions.sqlexpr``): building a
+  projection costs a few driver→JVM calls, not one per expression node.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.geo import bbox_diag_km, haversine_km, norm_name
+from batch_geocode_spark.functions.geo import bbox_diag_sql, norm_name_sql
+from batch_geocode_spark.functions.sqlexpr import expr, sql_of
 
 DEFAULT_MAX_BUFFER_KM = 15.0  # reference: geocode/batch_geocode.py:143-149
 DEFAULT_RESULTS_PER_SOURCE = 2  # reference: geocode/batch_geocode.py:139-142
 SUFFIXES = ["name", "type", "lat", "long", "buffer"]  # reference: geocode/utilities.py:42-45
 
 
-def extract_loc_key(caption) -> F.Column:
+def _loc_key_sql(caption: str) -> str:
+    raw = rf"regexp_extract({caption}, '\\bnear ([^,]+)', 1)"
+    return f"CASE WHEN {raw} != '' THEN {norm_name_sql(raw)} END"
+
+
+def extract_loc_key(caption: Column | str) -> Column:
     """Caption → normalized gazetteer join key.
 
     Location-string extraction: the fixture/caption grammar places the
     location between ' near ' and an optional ', <country>' tail — a
-    regexp is the NER-lite stand-in (pure Column expr, no UDF).
+    regexp is the NER-lite stand-in (a built-in expression, no UDF).
     """
-    raw = F.regexp_extract(caption, r"\bnear ([^,]+)", 1)
-    return F.when(raw != "", norm_name(raw))
+    return expr(_loc_key_sql(sql_of(caption)))
 
 
 def build_candidates(
     images: DataFrame,
     gazetteer: DataFrame,
     n_results: int = DEFAULT_RESULTS_PER_SOURCE,
-    dedup_keys: bool = False,
 ) -> DataFrame:
     """Long-form candidates: one row per (image_id, source, rank).
 
     Plan shape: [images: extract key, drop payload] ⋈_broadcast
     [gazetteer: rank ≤ n per (name, source)] — a single broadcast hash
     join, no shuffle on the big side.
-
-    ``dedup_keys=True`` geocodes distinct keys then re-joins — the
-    reference re-queries per row (geocode/batch_geocode.py:173-182) and
-    there each lookup is an HTTP call, so dedup is a huge win. Here the
-    lookup is a broadcast hash probe, so dedup only pays when key
-    extraction is expensive relative to the probe; measured at sf0.1 the
-    dedup plan is ~2.7× SLOWER (it scans+regexes the input twice and
-    adds a full-input distinct shuffle), hence default False.
     """
-    gaz = gazetteer.withColumn(
-        "rank",
-        F.row_number().over(
-            W.partitionBy("name_norm", "source").orderBy("api_rank", "gaz_id")
-        ),
-    ).filter(F.col("rank") <= n_results)
+    gaz = gazetteer.selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY name_norm, source ORDER BY api_rank, gaz_id) AS rank",
+    ).where(f"rank <= {int(n_results)}")
     gaz = _candidate_geometry(gaz)
-
-    keyed = images.select("image_id", extract_loc_key(F.col("caption")).alias("loc_key"))
-
-    if dedup_keys:
-        # geocode O(distinct keys) instead of O(rows), then re-join
-        keys = keyed.select("loc_key").where(F.col("loc_key").isNotNull()).distinct()
-        hits = keys.join(F.broadcast(gaz), keys.loc_key == gaz.name_norm, "inner")
-        return (
-            keyed.join(F.broadcast(hits), "loc_key", "inner")
-            .drop("loc_key", "name_norm")
-        )
-    joined = keyed.join(F.broadcast(gaz), keyed.loc_key == gaz.name_norm, "inner")
+    keyed = images.selectExpr("image_id", f"{_loc_key_sql('caption')} AS loc_key")
+    joined = keyed.join(F.broadcast(gaz), F.expr("loc_key = name_norm"), "inner")
     return joined.drop("loc_key", "name_norm")
 
 
 def _candidate_geometry(gaz: DataFrame) -> DataFrame:
-    """Attach the reference's point-set geometry to each gazetteer row."""
-    has_bbox = F.col("bb_w").isNotNull()
-    return (
-        gaz.withColumn("n_pts", F.when(has_bbox, F.lit(2)).otherwise(F.lit(1)))
-        .withColumn("min_lng", F.when(has_bbox, F.col("bb_w")).otherwise(F.col("lng")))
-        .withColumn("max_lng", F.when(has_bbox, F.col("bb_e")).otherwise(F.col("lng")))
-        .withColumn("min_lat", F.when(has_bbox, F.col("bb_s")).otherwise(F.col("lat")))
-        .withColumn("max_lat", F.when(has_bbox, F.col("bb_n")).otherwise(F.col("lat")))
-        .withColumn("sum_lng", F.col("min_lng") + F.when(has_bbox, F.col("max_lng")).otherwise(F.lit(0.0)))
-        .withColumn("sum_lat", F.col("min_lat") + F.when(has_bbox, F.col("max_lat")).otherwise(F.lit(0.0)))
-        .withColumn("cand_lng", F.col("sum_lng") / F.col("n_pts"))
-        .withColumn("cand_lat", F.col("sum_lat") / F.col("n_pts"))
-        .withColumn(
-            "buffer",
-            bbox_diag_km(F.col("min_lng"), F.col("min_lat"), F.col("max_lng"), F.col("max_lat")),
-        )
+    """Attach the reference's point-set geometry to each gazetteer row.
+    One projection; later columns read earlier ones by their alias
+    (Spark's lateral column aliases)."""
+    has_bbox = "bb_w IS NOT NULL"
+    return gaz.selectExpr(
+        "*",
+        f"CASE WHEN {has_bbox} THEN 2 ELSE 1 END AS n_pts",
+        f"CASE WHEN {has_bbox} THEN bb_w ELSE lng END AS min_lng",
+        f"CASE WHEN {has_bbox} THEN bb_e ELSE lng END AS max_lng",
+        f"CASE WHEN {has_bbox} THEN bb_s ELSE lat END AS min_lat",
+        f"CASE WHEN {has_bbox} THEN bb_n ELSE lat END AS max_lat",
+        f"min_lng + CASE WHEN {has_bbox} THEN max_lng ELSE 0.0D END AS sum_lng",
+        f"min_lat + CASE WHEN {has_bbox} THEN max_lat ELSE 0.0D END AS sum_lat",
+        "sum_lng / n_pts AS cand_lng",
+        "sum_lat / n_pts AS cand_lat",
+        f"{bbox_diag_sql('min_lng', 'min_lat', 'max_lng', 'max_lat')} AS buffer",
     )
 
 
@@ -146,9 +134,9 @@ def fuzzy_candidates(
         .filter(F.col("rank") <= n_results)
     )
     gaz = _candidate_geometry(gaz)
-    keyed = images.select(
-        "image_id", extract_loc_key(F.col("caption")).alias("loc_key")
-    ).where(F.col("loc_key").isNotNull())
+    keyed = images.selectExpr(
+        "image_id", f"{_loc_key_sql('caption')} AS loc_key"
+    ).where("loc_key IS NOT NULL")
     exact_names = gazetteer.select(F.col("name_norm").alias("loc_key")).distinct()
     misses = keyed.join(F.broadcast(exact_names), "loc_key", "left_anti").withColumn(
         "img_prefix", prefix_key(F.col("loc_key"))
@@ -160,7 +148,7 @@ def fuzzy_candidates(
 
 def vet_candidates(candidates: DataFrame, max_buffer: float = DEFAULT_MAX_BUFFER_KM) -> DataFrame:
     """Buffer vetting (reference: geocode/query_funcs.py:199-207)."""
-    return candidates.filter(F.col("buffer") <= F.lit(max_buffer))
+    return candidates.where(f"buffer <= {float(max_buffer)!r}D")
 
 
 def composite_best(
@@ -173,31 +161,32 @@ def composite_best(
     One shuffle, partial+final aggregation (Catalyst map-side combine).
     """
     agg = vetted.groupBy("image_id").agg(
-        F.sum("n_pts").alias("tot_pts"),
-        F.sum("sum_lng").alias("tot_lng"),
-        F.sum("sum_lat").alias("tot_lat"),
-        F.min("min_lng").alias("c_min_lng"),
-        F.min("min_lat").alias("c_min_lat"),
-        F.max("max_lng").alias("c_max_lng"),
-        F.max("max_lat").alias("c_max_lat"),
-        F.count(F.lit(1)).alias("num_valid"),
+        *(
+            F.expr(e)
+            for e in (
+                "sum(n_pts) AS tot_pts",
+                "sum(sum_lng) AS tot_lng",
+                "sum(sum_lat) AS tot_lat",
+                "min(min_lng) AS c_min_lng",
+                "min(min_lat) AS c_min_lat",
+                "max(max_lng) AS c_max_lng",
+                "max(max_lat) AS c_max_lat",
+                "count(1) AS num_valid",
+            )
+        )
     )
-    diag = bbox_diag_km(
-        F.col("c_min_lng"), F.col("c_min_lat"), F.col("c_max_lng"), F.col("c_max_lat")
-    )
+    diag = bbox_diag_sql("c_min_lng", "c_min_lat", "c_max_lng", "c_max_lat")
     return (
-        agg.withColumn("best_buffer", diag)
-        .filter(F.col("best_buffer") <= F.lit(max_buffer))
-        .select(
+        agg.selectExpr("*", f"{diag} AS best_buffer")
+        .where(f"best_buffer <= {float(max_buffer)!r}D")
+        .selectExpr(
             "image_id",
-            F.lit("Vetted").alias("best_name"),
-            F.concat(
-                F.lit("Composite of "), F.col("num_valid"), F.lit(" geocoded locations")
-            ).alias("best_type"),
-            (F.col("tot_lat") / F.col("tot_pts")).alias("best_lat"),
-            (F.col("tot_lng") / F.col("tot_pts")).alias("best_long"),
-            F.col("best_buffer"),
-            F.col("num_valid"),
+            "'Vetted' AS best_name",
+            "concat('Composite of ', num_valid, ' geocoded locations') AS best_type",
+            "tot_lat / tot_pts AS best_lat",
+            "tot_lng / tot_pts AS best_long",
+            "best_buffer",
+            "num_valid",
         )
     )
 

@@ -19,11 +19,10 @@ Two operators:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.cells import cell_encode, cell_ring_cells
-from batch_geocode_spark.functions.geo import haversine_km
+from batch_geocode_spark.functions.cells import cell_encode_sql, cell_ring_sql
+from batch_geocode_spark.functions.geo import haversine_sql
+from batch_geocode_spark.functions.sqlexpr import quote
 
 
 def knn_within_image(
@@ -37,36 +36,32 @@ def knn_within_image(
     whole operator costs ONE shuffle — no join back to a recomputed
     composite_best DAG.
     """
-    w_img = W.partitionBy("image_id")
-    diag = haversine_km(
-        F.min("min_lat").over(w_img),
-        F.min("min_lng").over(w_img),
-        F.max("max_lat").over(w_img),
-        F.max("max_lng").over(w_img),
+    w_img = "OVER (PARTITION BY image_id)"
+    diag = haversine_sql(
+        f"min(min_lat) {w_img}",
+        f"min(min_lng) {w_img}",
+        f"max(max_lat) {w_img}",
+        f"max(max_lng) {w_img}",
     )
     with_best = (
-        vetted.withColumn(
-            "best_lat", F.sum("sum_lat").over(w_img) / F.sum("n_pts").over(w_img)
+        vetted.selectExpr(
+            "*",
+            f"sum(sum_lat) {w_img} / sum(n_pts) {w_img} AS best_lat",
+            f"sum(sum_lng) {w_img} / sum(n_pts) {w_img} AS best_long",
+            f"{diag} AS best_diag",
         )
-        .withColumn(
-            "best_long", F.sum("sum_lng").over(w_img) / F.sum("n_pts").over(w_img)
-        )
-        .withColumn("best_diag", diag)
-        .filter(F.col("best_diag") <= F.lit(max_buffer))
-        .withColumn(
-            "dist_km",
-            haversine_km(
-                F.col("cand_lat"), F.col("cand_lng"), F.col("best_lat"), F.col("best_long")
-            ),
+        .where(f"best_diag <= {float(max_buffer)!r}D")
+        .selectExpr(
+            "*", f"{haversine_sql('cand_lat', 'cand_lng', 'best_lat', 'best_long')} AS dist_km"
         )
     )
-    w = W.partitionBy("image_id").orderBy("dist_km", "source", "rank")
     return (
-        with_best.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select(
-            "image_id", "source", "rank", "cand_lat", "cand_lng", "dist_km", "knn_rank"
+        with_best.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY image_id ORDER BY dist_km, source, rank) AS knn_rank",
         )
+        .where(f"knn_rank <= {int(k)}")
+        .select("image_id", "source", "rank", "cand_lat", "cand_lng", "dist_km", "knn_rank")
     )
 
 
@@ -91,33 +86,29 @@ def knn_spatial(
     """
     if res < 2:
         raise ValueError("res must be >= 2 (ring cells collide below that)")
-    pts = points.select(
-        F.col(p_id).alias("nbr_id"),
-        F.col(p_lat).alias("nbr_lat"),
-        F.col(p_lng).alias("nbr_lng"),
-        cell_encode(F.col(p_lat), F.col(p_lng), res).alias("cell"),
+    pts = points.selectExpr(
+        f"{quote(p_id)} AS nbr_id",
+        f"{quote(p_lat)} AS nbr_lat",
+        f"{quote(p_lng)} AS nbr_lng",
+        f"{cell_encode_sql(quote(p_lat), quote(p_lng), res)} AS cell",
     )
-    # encode + ring are pure Column exprs (r7: replaced two pandas_udfs
-    # — same integer math, no JVM->Python round trip, no ArrowEvalPython
-    # stage in the plan); invalid ring entries (lat clamp) are -1 and
-    # filtered after the explode
-    qry = queries.select(
-        F.col(q_id).alias("query_id"),
-        F.col(q_lat).alias("query_lat"),
-        F.col(q_lng).alias("query_lng"),
-        F.explode(
-            cell_ring_cells(cell_encode(F.col(q_lat), F.col(q_lng), res), res)
-        ).alias("cell"),
-    ).filter(F.col("cell") >= 0)
-    joined = qry.join(pts, "cell", "inner").withColumn(
-        "dist_km",
-        haversine_km(
-            F.col("query_lat"), F.col("query_lng"), F.col("nbr_lat"), F.col("nbr_lng")
-        ),
-    )
-    w = W.partitionBy("query_id").orderBy("dist_km", "nbr_id")
+    # encode + ring are built-in expressions (no Python UDF, no
+    # ArrowEvalPython stage); invalid ring entries (lat clamp) are -1
+    # and filtered after the explode
+    ring = cell_ring_sql(cell_encode_sql(quote(q_lat), quote(q_lng), res), res)
+    qry = queries.selectExpr(
+        f"{quote(q_id)} AS query_id",
+        f"{quote(q_lat)} AS query_lat",
+        f"{quote(q_lng)} AS query_lng",
+        f"explode({ring}) AS cell",
+    ).where("cell >= 0")
+    dist = haversine_sql("query_lat", "query_lng", "nbr_lat", "nbr_lng")
     return (
-        joined.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select("query_id", "nbr_id", "nbr_lat", "nbr_lng", "dist_km", "knn_rank")
+        qry.join(pts, "cell", "inner")
+        .selectExpr("query_id", "nbr_id", "nbr_lat", "nbr_lng", f"{dist} AS dist_km")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY dist_km, nbr_id) AS knn_rank",
+        )
+        .where(f"knn_rank <= {int(k)}")
     )

@@ -12,58 +12,43 @@ geocell-cover prefilter:
     points ⋈_broadcast cover on cell   -- candidate pairs only
     aggregate over ring edges          -- exact test per candidate
 
-The whole join is lazy JVM Column expressions: the polygon side is
-never collected to the driver, no Python worker runs, and the big side
-never shuffles (the cover broadcasts).
+The whole join is lazy built-in expressions, written as SQL text so
+each costs one driver→JVM call to build: the polygon side is never
+collected to the driver, no Python worker runs, and the big side never
+shuffles (the cover broadcasts). Lambda variables carry a leading
+underscore so no column name shadows them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from batch_geocode_spark.functions.cells import cell_encode, polyfill_bbox
+from batch_geocode_spark.functions.cells import cell_encode_sql, polyfill_sql
+from batch_geocode_spark.functions.sqlexpr import quote
 
+# The edges of all of a polygon's rings as one array of
+# (x1, y1, y2, dx = x2 - x1, dy = y2 - y1): even-odd parity summed over
+# every ring is the parity of the crossings of all their edges.
+_EDGES = (
+    "flatten(transform(rings, _ring -> transform("
+    "CASE WHEN size(_ring) > 1 THEN sequence(1, size(_ring) - 1) "
+    "ELSE CAST(array() AS ARRAY<INT>) END, "
+    "_i -> named_struct('x1', _ring[_i - 1].x, 'y1', _ring[_i - 1].y, 'y2', _ring[_i].y, "
+    "'dx', _ring[_i].x - _ring[_i - 1].x, 'dy', _ring[_i].y - _ring[_i - 1].y))))"
+)
 
-def _edges(rings: Column) -> Column:
-    """The edges of all of a polygon's rings as one array of
-    (x1, y1, y2, dx = x2 - x1, dy = y2 - y1): even-odd parity summed over
-    every ring is the parity of the crossings of all their edges."""
-
-    def ring_edges(ring: Column) -> Column:
-        idx = F.when(F.size(ring) > 1, F.sequence(F.lit(1), F.size(ring) - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.transform(
-            idx,
-            lambda i: F.struct(
-                ring[i - 1]["x"].alias("x1"),
-                ring[i - 1]["y"].alias("y1"),
-                ring[i]["y"].alias("y2"),
-                (ring[i]["x"] - ring[i - 1]["x"]).alias("dx"),
-                (ring[i]["y"] - ring[i - 1]["y"]).alias("dy"),
-            ),
-        )
-
-    return F.flatten(F.transform(rings, ring_edges))
-
-
-def _inside(edges: Column, px: Column, py: Column) -> Column:
-    """Even-odd ray cast from (px, py) toward +x over ``edges``.
-
-    The crossing abscissa is ``(x2 - x1) * (py - y1) / (y2 - y1) + x1``,
-    the float operations of the classic vectorized test in the same
-    order (the two differences are point-independent, so precomputing
-    them changes no bit). The division runs only when the edge straddles
-    ``py``, so a horizontal edge never divides by zero (an error under
-    ANSI mode)."""
-
-    def flip(inside: Column, e: Column) -> Column:
-        xint = e["dx"] * (py - e["y1"]) / e["dy"] + e["x1"]
-        straddles = (e["y1"] > py) != (e["y2"] > py)
-        return inside != F.when(straddles, px < xint).otherwise(F.lit(False))
-
-    return F.aggregate(edges, F.lit(False), flip)
+# Even-odd ray cast from (pt_lng, pt_lat) toward +x over ``edges``. The
+# crossing abscissa is ``(x2 - x1) * (py - y1) / (y2 - y1) + x1``, the
+# float operations of the classic vectorized test in the same order (the
+# two differences are point-independent, so precomputing them changes no
+# bit). The division runs only when the edge straddles ``py``, so a
+# horizontal edge never divides by zero (an error under ANSI mode).
+_INSIDE = (
+    "aggregate(edges, false, (_inside, _e) -> _inside != "
+    "CASE WHEN (_e.y1 > pt_lat) != (_e.y2 > pt_lat) "
+    "THEN pt_lng < _e.dx * (pt_lat - _e.y1) / _e.dy + _e.x1 ELSE false END)"
+)
 
 
 def pip_join(
@@ -81,28 +66,26 @@ def pip_join(
     bb_e, bb_n, rings); it is small by assumption, since its cover
     broadcasts. A point is inside when the crossings summed over all of
     a polygon's rings are odd, so inner rings are holes."""
-    cover = polygons.select(
-        F.explode(
-            polyfill_bbox(F.col("bb_w"), F.col("bb_s"), F.col("bb_e"), F.col("bb_n"), res)
-        ).alias("cell"),
-        "admin_id", "iso2", "admin_level", "name", _edges(F.col("rings")).alias("edges"),
+    cover = polygons.selectExpr(
+        f"explode({polyfill_sql('bb_w', 'bb_s', 'bb_e', 'bb_n', res)}) AS cell",
+        "admin_id", "iso2", "admin_level", "name", f"{_EDGES} AS edges",
     )
-    pts = points.select(
-        F.col(id_col).alias("pt_id"),
-        F.col(lat_col).alias("pt_lat"),
-        F.col(lng_col).alias("pt_lng"),
-        cell_encode(F.col(lat_col), F.col(lng_col), res).alias("cell"),
+    pts = points.selectExpr(
+        f"{quote(id_col)} AS pt_id",
+        f"{quote(lat_col)} AS pt_lat",
+        f"{quote(lng_col)} AS pt_lng",
+        f"{cell_encode_sql(quote(lat_col), quote(lng_col), res)} AS cell",
     )
     return (
         pts.join(F.broadcast(cover), "cell", "inner")
-        .where(_inside(F.col("edges"), F.col("pt_lng"), F.col("pt_lat")))
-        .select(
-            F.col("pt_id").cast("string"),
-            F.col("pt_lat").cast("double"),
-            F.col("pt_lng").cast("double"),
-            F.col("admin_id").cast("long"),
-            F.col("iso2").cast("string"),
-            F.col("admin_level").cast("int"),
-            F.col("name").cast("string"),
+        .where(_INSIDE)
+        .selectExpr(
+            "CAST(pt_id AS STRING) AS pt_id",
+            "CAST(pt_lat AS DOUBLE) AS pt_lat",
+            "CAST(pt_lng AS DOUBLE) AS pt_lng",
+            "CAST(admin_id AS BIGINT) AS admin_id",
+            "CAST(iso2 AS STRING) AS iso2",
+            "CAST(admin_level AS INT) AS admin_level",
+            "CAST(name AS STRING) AS name",
         )
     )

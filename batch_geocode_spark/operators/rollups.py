@@ -43,7 +43,7 @@ def density_rollup(density: DataFrame, res: int, parent_res: int) -> DataFrame:
     from batch_geocode_spark.functions.cells import cell_parent
 
     return (
-        density.withColumn("parent", cell_parent(F.col("cell"), res, parent_res))
+        density.withColumn("parent", cell_parent("cell", res, parent_res))
         .groupBy("parent")
         .agg(F.sum("n_images").alias("n_images"))
     )

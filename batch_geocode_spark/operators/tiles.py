@@ -34,7 +34,7 @@ def cell_density(
 ) -> DataFrame:
     """groupBy(cell) → count (+ approx distinct). ``salt_buckets`` > 0
     enables the two-phase salted plan for hot-cell skew."""
-    df = points.withColumn("cell", cell_encode(F.col(lat_col), F.col(lng_col), res))
+    df = points.withColumn("cell", cell_encode(lat_col, lng_col, res))
     if salt_buckets <= 1:
         aggs = [F.count(F.lit(1)).alias("n_images")]
         if distinct_col:
@@ -62,7 +62,7 @@ def pick_salt_buckets(
     when the max/mean ratio is below ``hot_ratio``."""
     hist = (
         points.sample(fraction=sample_fraction, seed=42)
-        .select(cell_encode(F.col(lat_col), F.col(lng_col), res).alias("cell"))
+        .select(cell_encode(lat_col, lng_col, res).alias("cell"))
         .groupBy("cell")
         .count()
         .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
@@ -88,7 +88,7 @@ def assemble_raster_tiles(
     if tile_res > res:
         raise ValueError("tile_res must be <= res")
     px = 2 ** (res - tile_res)
-    with_tile = density.withColumn("tile", cell_parent(F.col(cell_col), res, tile_res))
+    with_tile = density.withColumn("tile", cell_parent(cell_col, res, tile_res))
 
     def render(pdf: pd.DataFrame) -> pd.DataFrame:
         tile = int(pdf["tile"].iloc[0])

@@ -109,7 +109,7 @@ def stream_pip_matches(
 ) -> DataFrame:
     """CONTINUOUS stream-static point-in-polygon: streaming images →
     candidate geocodes (stream-static broadcast join, no aggregation) →
-    cell-cover broadcast join → exact Column ray cast. Every stage
+    cell-cover broadcast join → exact SQL ray cast. Every stage
     is append-mode stream-native (stateless maps + stream-static inner
     joins), so this needs no watermark, no foreachBatch, and emits
     matches per candidate row as they arrive. Returns the streaming
@@ -637,7 +637,7 @@ def ewma_cell_density(
             "transformWithState" if _has_protobuf() else "applyInPandasWithState"
         )
     keyed = (
-        images_stream.select("image_id", G.extract_loc_key(F.col("caption")).alias("loc_key"))
+        images_stream.select("image_id", G.extract_loc_key("caption").alias("loc_key"))
         .join(F.broadcast(gazetteer.filter(F.col("api_rank") == 1)),
               F.col("loc_key") == F.col("name_norm"), "inner")
         .select("image_id", cell_encode_col(res))
@@ -735,4 +735,4 @@ def _has_protobuf() -> bool:
 def cell_encode_col(res: int):
     from batch_geocode_spark.functions.cells import cell_encode
 
-    return cell_encode(F.col("lat"), F.col("lng"), res).alias("cell")
+    return cell_encode("lat", "lng", res).alias("cell")

@@ -223,3 +223,67 @@ def test_cell_ring_cells_rejects_degenerate_res():
 
     with pytest.raises(ValueError):
         cells.cell_ring_cells(F.lit(0), 1)
+
+
+def test_cell_ring_sql_matches_numpy_at_clamps_and_wrap(spark):
+    """cell_ring_sql parsed by Spark is element-identical to
+    np_cell_ring_batch at every res 2-9, for points on both poles
+    (lat clamps: the out-of-grid row is -1) and on both sides of the
+    antimeridian (lng wraps)."""
+    rng = np.random.default_rng(13)
+    lats = np.concatenate([rng.uniform(-90, 90, 30), [-90.0, 90.0, -89.999, 89.999, 0.0, 45.0]])
+    lngs = np.concatenate([rng.uniform(-180, 180, 30), [-180.0, 180.0, -179.999, 179.999, 180.0, -180.0]])
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(lats, lngs)], "lat double, lng double"
+    )
+    for res in range(2, 10):
+        cell = cells.cell_encode_sql("lat", "lng", res)
+        got = df.select(F.expr(cells.cell_ring_sql(cell, res)).alias("ring")).collect()
+        want = cells.np_cell_ring_batch(cells.np_cell_encode(lats, lngs, res), res).tolist()
+        assert [r["ring"] for r in got] == want, res
+
+
+def test_helper_types_and_decimal_inputs(spark):
+    """Cells are bigint, rings and covers array<bigint>, whatever the
+    input type: DECIMAL coordinates are computed in double (as numpy
+    computes them), never as exact decimals."""
+    from pyspark.sql import types as T
+
+    rng = np.random.default_rng(17)
+    lats = np.round(rng.uniform(-90, 90, 40), 6)
+    lngs = np.round(rng.uniform(-180, 180, 40), 6)
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(lats, lngs)], "lat double, lng double"
+    ).selectExpr("CAST(lat AS DECIMAL(30,6)) AS lat", "CAST(lng AS DECIMAL(30,6)) AS lng")
+    out = df.select(
+        cells.cell_encode("lat", "lng", 11).alias("cell"),
+        cells.cell_ring_cells(cells.cell_encode(F.col("lat"), F.col("lng"), 11), 11).alias("ring"),
+        cells.polyfill_bbox("lng", "lat", "lng", "lat", 11).alias("cover"),
+    )
+    types = [f.dataType for f in out.schema.fields]
+    assert types[0] == T.LongType()
+    assert [t.elementType for t in types[1:]] == [T.LongType(), T.LongType()]
+    want = cells.np_cell_encode(lats, lngs, 11)
+    rows = out.collect()
+    assert [r["cell"] for r in rows] == want.tolist()
+    assert [r["ring"] for r in rows] == cells.np_cell_ring_batch(want, 11).tolist()
+    assert [r["cover"] for r in rows] == [[int(c)] for c in want]
+
+
+def test_helpers_render_names_references_and_outputs(spark):
+    """A helper argument is a name, an F.col reference (quoted, so odd
+    names work) or another helper's output; any other Column is refused
+    rather than guessed at."""
+    import pytest
+
+    df = spark.createDataFrame([(10.0, 20.0)], "`my lat` double, `lng.x` double")
+    got = df.select(
+        cells.cell_encode(F.col("`my lat`"), F.col("`lng.x`"), 9).alias("a"),
+        cells.cell_encode("my lat", "`lng.x`", 9).alias("b"),
+        cells.cell_parent(cells.cell_encode(F.col("`my lat`"), "`lng.x`", 9), 9, 4).alias("c"),
+    ).collect()[0]
+    assert got["a"] == got["b"] == int(cells.np_cell_encode(10.0, 20.0, 9))
+    assert got["c"] == int(cells.np_cell_encode(10.0, 20.0, 4))
+    for bad in (F.col("lat") + 1, F.lit(1.0), F.col("lat").alias("x"), 1.0):
+        with pytest.raises(TypeError):
+            cells.cell_encode(bad, "lng", 9)

@@ -62,3 +62,41 @@ def test_norms(spark):
     assert got[0]["i"] == "us"
     assert got[1]["i"] is None
     assert got[2]["i"] is None
+
+
+
+def _column_api_haversine(lat1, lng1, lat2, lng2):
+    """The node-by-node Column-API form that haversine_sql replaced: the
+    reference the SQL text must equal bit for bit."""
+    dlat = F.radians(lat2 - lat1) / 2.0
+    dlng = F.radians(lng2 - lng1) / 2.0
+    a = (
+        F.sin(dlat) * F.sin(dlat)
+        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlng) * F.sin(dlng)
+    )
+    return 2.0 * EARTH_RADIUS_KM * F.asin(F.sqrt(a))
+
+
+def test_haversine_sql_matches_column_api_bitwise(spark):
+    """haversine_km and bbox_diag_km are haversine_sql: double-typed, also
+    for DECIMAL inputs, and bit-identical to the Column-API form."""
+    from pyspark.sql import types as T
+
+    from batch_geocode_spark.functions.geo import bbox_diag_km
+
+    rng = np.random.default_rng(3)
+    rows = [tuple(float(v) for v in r) for r in np.round(rng.uniform(-60, 60, (200, 4)), 6)]
+    df = spark.createDataFrame(rows, "lat1 double, lng1 double, lat2 double, lng2 double")
+    dec = df.selectExpr(*(f"CAST({c} AS DECIMAL(30,6)) AS {c}" for c in df.columns))
+    for frame in (df, dec):
+        out = frame.select(
+            haversine_km("lat1", "lng1", "lat2", "lng2").alias("d"),
+            bbox_diag_km(F.col("lng1"), F.col("lat1"), F.col("lng2"), F.col("lat2")).alias("b"),
+            _column_api_haversine(
+                F.col("lat1"), F.col("lng1"), F.col("lat2"), F.col("lng2")
+            ).alias("ref"),
+        )
+        assert [f.dataType for f in out.schema.fields] == [T.DoubleType()] * 3
+        got = out.collect()
+        assert [r["d"] for r in got] == [r["ref"] for r in got]
+        assert [r["b"] for r in got] == [r["ref"] for r in got]

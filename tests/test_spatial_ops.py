@@ -17,7 +17,11 @@ def geo(spark):
     vetted, best = G.geocode_images(images, gaz)
     vetted = vetted.cache()
     best = best.cache()
-    return images, gaz, vetted, best
+    yield images, gaz, vetted, best
+    # a cached relation left behind is swapped into every later plan of
+    # the same shape (e.g. test_plans' exchange-reuse audit)
+    vetted.unpersist(blocking=True)
+    best.unpersist(blocking=True)
 
 
 # ------------------------------------------------------------------ tiles
